@@ -61,37 +61,38 @@ class AuditStore:
         partition_rows: list[tuple[int, int, int]] | None = None,
     ) -> None:
         """Write one batch-total lineage row (partition_id = -1) plus optional
-        per-partition rows (partition_id, rows_applied, lsn_watermark)."""
-        now = F.current_timestamp()
-        rows = [
-            {
-                "run_id": run_id, "batch_id": batch_id, "status": status,
-                "rows_read": rows_read, "rows_valid": rows_valid,
-                "rows_invalid": rows_invalid, "rows_applied": rows_applied,
-                "lsn_watermark": lsn_watermark, "partition_id": -1,
-                "snapshot_id": snapshot_id,
-            }
-        ]
-        for pid, applied, wm in partition_rows or []:
-            rows.append(
-                {
-                    "run_id": run_id, "batch_id": batch_id, "status": status,
-                    "rows_read": None, "rows_valid": None, "rows_invalid": None,
-                    "rows_applied": applied, "lsn_watermark": wm,
-                    "partition_id": pid, "snapshot_id": snapshot_id,
-                }
-            )
-        # typed schema, not just names: a fully-rejected batch has every
-        # metric column None and name-only inference cannot type it
-        from pyspark.sql import types as T
+        per-partition rows (partition_id, rows_applied, lsn_watermark).
 
+        The rows cross into Spark as ONE Arrow table, a local relation that
+        needs no Python worker to decode it, and are written as one file
+        (a local relation is otherwise split one slice per core)."""
+        import pyarrow as pa
+        from pyspark.sql import types as T
+        from pyspark.sql.pandas.types import to_arrow_schema
+
+        parts = partition_rows or []
+        n = 1 + len(parts)
+        cols = {
+            "run_id": [run_id] * n,
+            "batch_id": [batch_id] * n,
+            "status": [status] * n,
+            "rows_read": [rows_read] + [None] * len(parts),
+            "rows_valid": [rows_valid] + [None] * len(parts),
+            "rows_invalid": [rows_invalid] + [None] * len(parts),
+            "rows_applied": [rows_applied] + [p[1] for p in parts],
+            "lsn_watermark": [lsn_watermark] + [p[2] for p in parts],
+            "partition_id": [-1] + [p[0] for p in parts],
+            "snapshot_id": [snapshot_id] * n,
+        }
+        # typed schema, not inferred: a fully-rejected batch has every
+        # metric column None and inference cannot type it
         log_schema = T.StructType(
             [f for f in INGEST_LOG_SCHEMA.fields if f.name != "updated"]
         )
         df = self.spark.createDataFrame(
-            [tuple(r.get(f.name) for f in log_schema.fields) for r in rows],
+            pa.Table.from_pydict(cols, schema=to_arrow_schema(log_schema)),
             schema=log_schema,
-        ).withColumn("updated", now)
+        ).withColumn("updated", F.current_timestamp()).coalesce(1)
         # fenced like the data merge: a re-delivered batch (concurrent
         # second driver, resume=False rerun) must not append duplicate
         # lineage rows that double run_metrics' sums. Status transitions

@@ -892,12 +892,8 @@ class LakeTable:
             snapshot_id, as_of_timestamp_ms=as_of_timestamp_ms, tag=tag
         )
         cur = self.schema(snap)
-        types = {f.name: f.dataType for f in cur.fields}
-        tz = self._session_tz()
         groups: dict[int, list[str]] = {}
-        for fe in self.files(snap):
-            if where and _file_skippable(fe.stats, where, types, tz):
-                continue
+        for fe in self._split_files(snap, where)[0]:
             groups.setdefault(fe.schema_id, []).append(self.fs.join(self.path, fe.path))
         parts: list[DataFrame] = []
         for sid, paths in groups.items():
@@ -1275,17 +1271,91 @@ class LakeTable:
         snapshot_id: int | None = None,
     ) -> tuple[list[FileEntry], list[FileEntry]]:
         """(scanned, skipped) file split a ``read(where=...)`` would make —
-        the observability hook for stats-based data skipping."""
-        snap = self.snapshot(snapshot_id)
+        the observability hook for bucket pruning and stats-based data
+        skipping."""
+        return self._split_files(self.snapshot(snapshot_id), where)
+
+    def _split_files(
+        self, snap: dict, where: list[tuple] | None
+    ) -> tuple[list[FileEntry], list[FileEntry]]:
+        """(scanned, skipped): a file is skipped when its bucket cannot hold
+        a key the ``where`` pins (:meth:`_where_buckets`) or its min/max
+        stats provably exclude every predicate match."""
+        files = self.files(snap)
+        if not where:
+            return files, []
         types = {f.name: f.dataType for f in self.schema(snap).fields}
         tz = self._session_tz()
+        buckets = self._where_buckets(snap, where, files)
         scanned, skipped = [], []
-        for fe in self.files(snap):
-            if where and _file_skippable(fe.stats, where, types, tz):
+        for fe in files:
+            if (
+                buckets is not None
+                and fe.bucket is not None
+                and fe.bucket not in buckets
+            ) or _file_skippable(fe.stats, where, types, tz):
                 skipped.append(fe)
             else:
                 scanned.append(fe)
         return scanned, skipped
+
+    def _where_buckets(
+        self, snap: dict, where: list[tuple], files: list[FileEntry]
+    ) -> set[int] | None:
+        """Bucket ids that can hold a row matching ``where``, or None when
+        no ``=``/``in`` predicate pins the ``bucket_by`` column.
+
+        Only literals of the column's own Python type (``int`` for integral
+        columns, ``str`` for strings) pin it: any other literal compares
+        through a cast the hash does not model, so it never prunes. The ids
+        come from :meth:`_bucket_expr` itself, projected over a local
+        Arrow-built relation of the literals typed as the column (no Spark
+        job), so reads and writes share one definition of the hash. Files
+        written under an older type of the column (an int widened to long
+        before such changes were rejected) hash differently, so their
+        presence disables pruning."""
+        col = snap.get("bucket_by")
+        if not col:
+            return None
+        dtype = self.schema(snap)[col].dataType
+        if isinstance(dtype, T.IntegralType):
+            py_type = int
+        elif isinstance(dtype, T.StringType):
+            py_type = str
+        else:
+            return None
+        pinned = [
+            [value] if op == "=" else list(value)
+            for c, op, value in where
+            if c == col and op in ("=", "in")
+        ]
+        # `type(x) is int` also keeps bools (an int subclass) out
+        pinned = [vs for vs in pinned if all(type(x) is py_type for x in vs)]
+        if not pinned:
+            return None
+        for sid in {fe.schema_id for fe in files}:
+            file_schema = _schema_from_json(snap["schemas"][str(sid)])
+            if file_schema[col].dataType != dtype:
+                return None
+        literals = list({x for vs in pinned for x in vs})
+        if not literals:
+            return set()  # IN () matches nothing
+        import pyarrow as pa
+        from pyspark.sql.pandas.types import to_arrow_type
+
+        try:
+            arr = pa.array(literals, type=to_arrow_type(dtype))
+        except (pa.ArrowException, OverflowError):
+            return None  # out of the column's range: the residual filter decides
+        rel = self.spark.createDataFrame(
+            pa.table({col: arr}), schema=T.StructType([T.StructField(col, dtype)])
+        )
+        bucket_of = dict(
+            rel.select(F.col(col), self._bucket_expr(snap)).collect()
+        )
+        # a matching row satisfies every predicate, so its bucket is in
+        # each predicate's bucket set
+        return set.intersection(*[{bucket_of[x] for x in vs} for vs in pinned])
 
     def _session_tz(self) -> str | None:
         try:
@@ -1360,16 +1430,23 @@ class LakeTable:
                 int(props.get("write.zorder.bits") or ZORDER_BITS),
             )]
         if bucket is not None:
-            # shuffle by bucket first so each task owns whole buckets —
-            # otherwise partitionBy writes (tasks × buckets) tiny files and
-            # the per-file metadata cost dominates the commit
-            n_out = n_partitions or int(snap.get("bucket_count") or 16)
             dfb = df.withColumn(_BUCKET_COL, bucket)
             if sort_exprs:
+                n_out = n_partitions or int(snap.get("bucket_count") or 16)
                 dfb = dfb.repartitionByRange(
                     n_out, F.col(_BUCKET_COL), *sort_exprs
                 ).sortWithinPartitions(F.col(_BUCKET_COL), *sort_exprs)
             else:
+                # hash-partition by bucket id so each bucket lands in
+                # exactly one task and gets exactly one file — otherwise
+                # partitionBy writes (tasks × buckets) tiny files. One task
+                # per core, not per bucket: each task writes its buckets'
+                # files one after another, and a small commit no longer
+                # pays a per-bucket task launch for a few rows
+                n_out = min(
+                    int(snap.get("bucket_count") or 16),
+                    self.spark.sparkContext.defaultParallelism,
+                )
                 dfb = dfb.repartition(n_out, _BUCKET_COL)
             writer = dfb.write.partitionBy(_BUCKET_COL)
         else:
@@ -1624,6 +1701,9 @@ class LakeTable:
             written.clear()
         if not written:
             aligned, schemas, sid = self._prepare_write(df, snap)
+            _check_bucket_type(
+                snap, self.schema(snap), _schema_from_json(schemas[str(sid)])
+            )
             files = self._write_files(aligned, snap, sid)
             written.update(
                 files=files,
@@ -2180,6 +2260,7 @@ class LakeTable:
         new_user_schema, changed = reconcile_schemas(
             T.StructType(user_fields), src_payload_schema
         )
+        _check_bucket_type(snap, table_schema, new_user_schema)
         schemas = dict(snap["schemas"])
         sid = snap["current_schema_id"]
         full_schema = T.StructType(
@@ -3020,6 +3101,25 @@ def _merge_rows_decision(
         .unionByName(src_nk_out)
     )
     return _align_to_schema(merged, full_schema)
+
+
+def _check_bucket_type(
+    snap: dict, current: T.StructType, evolved: T.StructType
+) -> None:
+    """Reject a schema evolution that changes the ``bucket_by`` column's
+    type. xxhash64 hashes an int and its widened long differently, so rows
+    already written would sit in their old-type buckets while later merges
+    look the same keys up in their new-type buckets and insert duplicates."""
+    col = snap.get("bucket_by")
+    if not col:
+        return
+    old, new = current[col].dataType, evolved[col].dataType
+    if old != new:
+        raise SchemaEvolutionError(
+            f"cannot change the type of bucket column {col}: "
+            f"{old.simpleString()} -> {new.simpleString()}; its bucket "
+            f"placement depends on its type"
+        )
 
 
 def reconcile_schemas(

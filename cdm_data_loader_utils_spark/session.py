@@ -33,6 +33,15 @@ _DEFAULTS: dict[str, str] = {
     "spark.sql.autoBroadcastJoinThreshold": "64m",
     "spark.sql.parquet.compression.codec": "zstd",
     "spark.ui.enabled": "false",
+    # A read of more paths than this threshold launches a Spark job (one
+    # task per path) just to list them. Lake reads name every data file
+    # explicitly from the manifest, so a 64-bucket table crosses the
+    # default of 32 on every merge, stats pass and lookup, and each such
+    # job cost ~0.25 s on a 4-core local session, while the driver stats a
+    # local file in microseconds.
+    # Raised above any manifest's file count; a cluster on an object store,
+    # where each stat is a remote call, should supply a lower value.
+    "spark.sql.sources.parallelPartitionDiscovery.threshold": "100000",
     "spark.sql.shuffle.partitions": "32",
     # local mode = single JVM; the default 1g heap OOMs on multi-million-row
     # writes. On a real cluster this comes from spark-submit instead.

@@ -149,3 +149,83 @@ def test_partition_filters_keeps_in_lists_whole(spark, tmp_path):
     in_filters = [f for f in pf if " IN " in f]
     assert len(in_filters) == 1, pf
     assert "(1,3,4)" in in_filters[0].replace(" ", ""), pf
+
+
+def _spark_jobs(spark, fn):
+    """Run ``fn``; return its result and the jobs it launched, each as
+    ``(description, [(tasks, output_records) per stage])``, read from the
+    status store after the listener bus has drained."""
+    sc = spark.sparkContext._jsc.sc()
+
+    def seq(s):
+        return [s.apply(i) for i in range(s.size())]
+
+    def jobs():
+        sc.listenerBus().waitUntilEmpty()
+        return seq(sc.statusStore().jobsList(None))
+
+    last = max((j.jobId() for j in jobs()), default=-1)
+    out = fn()
+    launched = []
+    for j in sorted(jobs(), key=lambda j: j.jobId()):
+        if j.jobId() <= last:
+            continue
+        desc = j.description().get() if j.description().isDefined() else j.name()
+        stages = [
+            (sd.numTasks(), sd.outputRecords())
+            for sid in seq(j.stageIds())
+            for sd in seq(sc.statusStore().stageData(sid, False, None, False, None))
+        ]
+        launched.append((desc, stages))
+    return out, launched
+
+
+def test_lake_commit_and_read_have_no_listing_job_and_core_sized_writes(
+    spark, warehouse
+):
+    """The manifest names every file, so no read lists files through a
+    Spark job; a bucketed write runs one task per core, not per bucket,
+    and still writes exactly one file per touched bucket."""
+    import os
+
+    from pyspark.sql import types as T
+
+    from cdm_data_loader_utils_spark.lake.table import LakeTable
+
+    schema = T.StructType(
+        [T.StructField("k", T.StringType()), T.StructField("v", T.LongType())]
+    )
+    t = LakeTable.create(
+        spark, os.path.join(warehouse, "t"), schema, bucket_by="k", bucket_count=64
+    )
+    t.append(spark.createDataFrame([(f"k{i}", i) for i in range(2000)], schema))
+    assert len(t.files()) >= 33
+
+    def listing(launched):
+        return [d for d, _ in launched if "Listing leaf files" in (d or "")]
+
+    n, launched = _spark_jobs(spark, lambda: t.read().count())
+    assert n == 2000 and listing(launched) == []
+
+    src_schema = T.StructType(
+        list(schema.fields)
+        + [T.StructField("op", T.StringType()), T.StructField("lsn", T.LongType())]
+    )
+    src = spark.createDataFrame(
+        [(f"k{i}", -i, "u", 5) for i in range(0, 2000, 40)]
+        + [(f"new{i}", i, "i", 5) for i in range(20)],
+        src_schema,
+    )
+    touched = {
+        r[0] for r in src.select(t._bucket_expr(t.snapshot())).distinct().collect()
+    }
+    before = {fe.path for fe in t.files()}
+    _, launched = _spark_jobs(spark, lambda: t.merge_cdc(src, key_cols=["k"]))
+    assert listing(launched) == []
+    writes = [s for _, stages in launched for s in stages if s[1] > 0]
+    assert writes, launched
+    cores = spark.sparkContext.defaultParallelism
+    assert all(tasks <= cores for tasks, _ in writes), writes
+    added = [fe for fe in t.files() if fe.path not in before]
+    assert sorted(fe.bucket for fe in added) == sorted(touched)
+    assert t.snapshot()["summary"]["files_added"] == len(touched) > cores
