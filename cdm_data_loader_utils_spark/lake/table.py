@@ -95,18 +95,10 @@ _NO_BUCKET = "u"
 # batch at 10^10 rows must never be collected to the driver
 BROADCAST_PROBE_MAX_ROWS = 1_000_000
 
-# floor below which the MERGE rewrite keeps the single full-outer join: the
-# decision-path plan (guide §8 — verdicts on narrow key/lsn proxies so the
-# payload shuffles once) saves bytes proportional to the batch, but costs two
-# extra fixed stages (the narrow verdict join + its broadcast build) and a
-# second column-pruned target scan. Measured on the r7 ABBA interleave: at
-# ~200k-row batches the decision path is 0.76x (median 27.0 s → 20.5 s for
-# the 4M-event replay leg); at ~2k-row batches it is 1.47x — the payload is
-# a few MB and the fixed stages dominate. The floor is rows, a proxy for
-# shuffle bytes; both bounds are per-batch quantities, so the routing is
-# scale-independent (a 100 TB table still merges micro-batches of bounded
-# size, and big batches always take the decision path).
-DECISION_MERGE_MIN_ROWS = 50_000
+# a MERGE batch with at least this many rows per candidate target row is
+# "dense": the existence probe would hit (almost) every candidate file, so it
+# is skipped and every candidate is rewritten
+DENSE_PROBE_RATIO = 0.02
 
 # widening lattice for schema evolution (reference analogue: mergeSchema=true
 # appends, utils/spark_delta.py:195-196)
@@ -2186,7 +2178,6 @@ class LakeTable:
         touched_buckets: set[int] | None = None,
         touched_buckets_count: int | None = None,
         incoming_rows: int | None = None,
-        dense_probe_ratio: float = 0.02,
         exclude_cols: tuple = ("batch_id",),
     ) -> int:
         """CDC MERGE: last-writer-wins upsert/delete, copy-on-write.
@@ -2218,16 +2209,33 @@ class LakeTable:
 
         Scale: only parquet files whose bucket intersects the incoming key
         set AND that actually contain a matching key are rewritten; all other
-        files carry forward as metadata. The existence probe and the rewrite
-        are executor-side joins (broadcast only when the batch is provably
-        small — see ``BROADCAST_PROBE_MAX_ROWS``). Retries on snapshot races
-        with per-attempt fence re-check, same as append.
+        files carry forward as metadata. The rewrite is ONE full-outer join
+        of the source with the affected files' rows, whose output is written
+        as the replacement files (updates, deletes and inserts alike).
+        Retries on snapshot races with per-attempt fence re-check, same as
+        append.
+
+        ``incoming_rows``, when given, must be the exact row count of
+        ``source``: it is not checked. It picks between skipping the
+        existence probe (a batch dense against the candidate rows, see
+        ``DENSE_PROBE_RATIO``) and running it, and it sizes the probe — the
+        source keys are broadcast only when it is at most
+        ``BROADCAST_PROBE_MAX_ROWS``, so an understated count on a huge
+        batch can exhaust executor memory. ``None`` always probes, shuffled.
+
+        ``source`` is evaluated more than once (the touched-bucket scan when
+        no valid hint is given, the existence probe, the rewrite), so it
+        must be deterministic. A source that returns other rows when
+        re-evaluated (e.g. an unpersisted ``dropDuplicates`` tie-break) can
+        make the rewrite insert a key a second time, beside its live row in
+        a file the probe did not select. Persist such a source first, as
+        the replay and replicator callers do.
         """
         return self._retry_commit(
             lambda: self._merge_once(
                 source, key_cols, lsn_col, op_col, summary, fence_key,
                 touched_buckets, touched_buckets_count,
-                incoming_rows, dense_probe_ratio, exclude_cols,
+                incoming_rows, exclude_cols,
             )
         )
 
@@ -2242,7 +2250,6 @@ class LakeTable:
         touched_buckets: set[int] | None,
         touched_buckets_count: int | None,
         incoming_rows: int | None,
-        dense_probe_ratio: float,
         exclude_cols: tuple,
     ) -> int:
         snap = self.snapshot()
@@ -2320,7 +2327,7 @@ class LakeTable:
         dense = (
             incoming_rows is not None
             and candidate_rows > 0
-            and incoming_rows >= dense_probe_ratio * candidate_rows
+            and incoming_rows >= DENSE_PROBE_RATIO * candidate_rows
         )
         if candidates and dense:
             affected = candidates
@@ -2341,66 +2348,33 @@ class LakeTable:
             affected = [fe for fe in candidates if fe.path in hit_files]
         # 5. rewrite affected files merged with source (the merge also
         # carries source-only rows, i.e. brand-new keys, so ONE write covers
-        # updates, deletes and inserts). Two row-identical plans (r7):
-        #
-        # * decision path (batch small enough to broadcast its keys): the
-        #   win/lose verdicts are computed on NARROW (key, lsn) projections
-        #   only — the target's keep-side is a broadcast-filtered scan and
-        #   the source's emit count a broadcast attach — so the full-width
-        #   payload crosses the network exactly ONCE (the bucket-clustered
-        #   shuffle inside ``_write_files``). Guide §8: when a pipeline
-        #   shuffles heavy payloads more than once, make every shuffle but
-        #   the last operate on a lightweight proxy. The former full-outer
-        #   join shuffled BOTH payload sides by key and then re-shuffled the
-        #   merged payload by bucket — every byte crossed twice.
-        # * join path (unbounded batches): the original full-outer join,
-        #   kept for sources whose key set could dwarf executor memory as a
-        #   broadcast.
+        # updates, deletes and inserts)
         if affected:
             tgt_rows = self._read_files(snap, affected, with_file_col=False)
             tgt_rows = _align_to_schema(tgt_rows, full_schema)
-            # bucketed tables only: their write re-clusters by bucket, so
-            # the decision path's shuffle-free union still lands as one
-            # file set per bucket. On an UNBUCKETED table `_write_files`
-            # writes the input partitioning as-is — the join path's
-            # post-shuffle partition count gives bounded file counts, the
-            # decision union's (scan partitions + source partitions) does
-            # not.
-            decision = (
-                bucket is not None
-                and incoming_rows is not None
-                and DECISION_MERGE_MIN_ROWS
-                <= incoming_rows
-                <= BROADCAST_PROBE_MAX_ROWS
+            s = src.alias("s")
+            t = tgt_rows.alias("t")
+            joined = t.join(s, on=key_cols, how="full_outer")
+            s_lsn, t_lsn = F.col(f"s.{META_LSN}"), F.col(f"t.{META_LSN}")
+            take_src = s_lsn.isNotNull() & (t_lsn.isNull() | (s_lsn > t_lsn))
+            merged = joined.select(
+                *[
+                    F.coalesce(F.col(f"s.{k}"), F.col(f"t.{k}")).alias(k)
+                    for k in key_cols
+                ],
+                *[
+                    F.when(take_src, F.col(f"s.{f.name}"))
+                    .otherwise(F.col(f"t.{f.name}"))
+                    .alias(f.name)
+                    for f in new_user_schema.fields
+                    if f.name not in key_cols
+                ],
+                F.when(take_src, s_lsn).otherwise(t_lsn).alias(META_LSN),
+                F.when(take_src, F.col(f"s.{META_DELETED}"))
+                .otherwise(F.col(f"t.{META_DELETED}"))
+                .alias(META_DELETED),
             )
-            if decision:
-                out_rows = _merge_rows_decision(
-                    src, tgt_rows, key_cols, new_user_schema, full_schema
-                )
-            else:
-                s = src.alias("s")
-                t = tgt_rows.alias("t")
-                joined = t.join(s, on=key_cols, how="full_outer")
-                s_lsn, t_lsn = F.col(f"s.{META_LSN}"), F.col(f"t.{META_LSN}")
-                take_src = s_lsn.isNotNull() & (t_lsn.isNull() | (s_lsn > t_lsn))
-                merged = joined.select(
-                    *[
-                        F.coalesce(F.col(f"s.{k}"), F.col(f"t.{k}")).alias(k)
-                        for k in key_cols
-                    ],
-                    *[
-                        F.when(take_src, F.col(f"s.{f.name}"))
-                        .otherwise(F.col(f"t.{f.name}"))
-                        .alias(f.name)
-                        for f in new_user_schema.fields
-                        if f.name not in key_cols
-                    ],
-                    F.when(take_src, s_lsn).otherwise(t_lsn).alias(META_LSN),
-                    F.when(take_src, F.col(f"s.{META_DELETED}"))
-                    .otherwise(F.col(f"t.{META_DELETED}"))
-                    .alias(META_DELETED),
-                )
-                out_rows = _align_to_schema(merged, full_schema)
+            out_rows = _align_to_schema(merged, full_schema)
         else:
             # no existing file contains any incoming key (carried files were
             # existence-probed with no hit or live in untouched buckets):
@@ -2976,131 +2950,6 @@ def _align_to_schema(df: DataFrame, schema: T.StructType) -> DataFrame:
         else:
             cols.append(F.lit(None).cast(f.dataType).alias(f.name))
     return df.select(*cols)
-
-
-def _merge_rows_decision(
-    src: DataFrame,
-    tgt_rows: DataFrame,
-    key_cols: list[str],
-    new_user_schema: T.StructType,
-    full_schema: T.StructType,
-) -> DataFrame:
-    """The merged rewrite rows, computed so the full-width payload never
-    shuffles before the bucket-clustered write (guide §8).
-
-    Row-identical to the full-outer-join formulation in ``_merge_once`` —
-    per (t, s) key match the output is the s-payload when
-    ``s.lsn IS NOT NULL AND (t.lsn IS NULL OR s.lsn > t.lsn)`` else the
-    t-row, unmatched rows of either side pass through (an unmatched s row
-    with a NULL lsn degenerates to key + NULL payload, exactly as the
-    full-outer projection did) — but the decision is made on narrow
-    (key, lsn) projections:
-
-    * keep side: the target scan broadcast-left-joins the source's
-      (key, lsn) pairs and keeps un-beaten rows — no target shuffle at all;
-    * emit side: the source's (key, lsn) pairs join the target's (a
-      column-pruned second scan of the same files) to count, per source
-      key, how many target rows it beats (plus 1 when the key is brand
-      new); the count broadcast-attaches back to the full-width source.
-
-    Requires the source key set to fit a broadcast (the caller gates on
-    ``incoming_rows <= BROADCAST_PROBE_MAX_ROWS``) and at most one source
-    row per key (the documented ``merge_cdc`` contract). NULL-keyed source
-    rows never equality-match anything and are handled by a dedicated
-    pass-through branch (a GROUP BY would wrongly collapse them).
-    """
-    payload_fields = [f for f in new_user_schema.fields
-                      if f.name not in key_cols]
-    out_cols = [f.name for f in full_schema.fields]
-
-    some_key_null = F.lit(False)
-    for k in key_cols:
-        some_key_null = some_key_null | F.col(k).isNull()
-    src_k = src.filter(~some_key_null)
-    src_nk = src.filter(some_key_null)
-
-    s_lsn = F.col("__s_lsn")
-    t_lsn = F.col(META_LSN)
-    src_kl = src_k.select(
-        *key_cols, F.col(META_LSN).alias("__s_lsn"),
-    )
-
-    # keep side: target rows NOT beaten by a source row. take_src is never
-    # NULL (the isNotNull conjunct short-circuits), so ~take_src keeps both
-    # unmatched rows (__s_lsn NULL) and tie/older source rows.
-    take_src = s_lsn.isNotNull() & (t_lsn.isNull() | (s_lsn > t_lsn))
-    keep = (
-        tgt_rows.join(F.broadcast(src_kl), on=key_cols, how="left")
-        .filter(~take_src)
-        .select(*out_cols)
-    )
-
-    # emit side: per source key, how many merged output rows carry the
-    # source payload (one per beaten target row; one when the key is new).
-    tgt_kl = tgt_rows.select(
-        *key_cols, F.col(META_LSN).alias("__t_lsn"),
-        F.lit(True).alias("__t_m"),
-    )
-    jt_lsn, jt_m = F.col("__t_lsn"), F.col("__t_m")
-    j = src_kl.join(tgt_kl, on=key_cols, how="left")
-    beat = (
-        jt_m.isNotNull()
-        & s_lsn.isNotNull()
-        & (jt_lsn.isNull() | (s_lsn > jt_lsn))
-    )
-    brand_new = jt_m.isNull() & s_lsn.isNotNull()
-    ghost = jt_m.isNull() & s_lsn.isNull()
-    verdict = j.groupBy(*key_cols).agg(
-        F.sum(F.when(beat | brand_new, 1).otherwise(0)).alias("__n"),
-        F.max(F.when(ghost, 1).otherwise(0)).alias("__g"),
-    )
-    src_out = (
-        src_k.join(
-            F.broadcast(
-                verdict.filter(F.col("__n") > 0).select(*key_cols, "__n")
-            ),
-            on=key_cols,
-            how="inner",
-        )
-        # multiplicity > 1 only when the target held duplicate rows for a
-        # key (e.g. append-then-merge); sequence(1,1) is a no-op otherwise
-        .withColumn(
-            "__dup",
-            F.explode(
-                F.sequence(F.lit(1).cast("long"), F.col("__n").cast("long"))
-            ),
-        )
-        .select(*out_cols)
-    )
-    # an unmatched source row with a NULL lsn: the full-outer projection
-    # emitted its keys with an all-NULL payload (take_src false, t side
-    # absent); multiplicity is always 1 (unmatched ⇒ single join row)
-    ghosts = _align_to_schema(
-        verdict.filter(F.col("__g") > 0).select(*key_cols), full_schema
-    )
-    # NULL-keyed source rows: never match, pass through as key + payload
-    # when lsn is present, key + NULL payload when not
-    nk_take = F.col(META_LSN).isNotNull()
-    src_nk_out = src_nk.select(
-        *key_cols,
-        *[
-            F.when(nk_take, F.col(f.name))
-            .otherwise(F.lit(None).cast(f.dataType))
-            .alias(f.name)
-            for f in payload_fields
-        ],
-        F.when(nk_take, F.col(META_LSN)).alias(META_LSN),
-        F.when(nk_take, F.col(META_DELETED))
-        .otherwise(F.lit(None).cast("boolean"))
-        .alias(META_DELETED),
-    ).select(*out_cols)
-
-    merged = (
-        keep.unionByName(src_out)
-        .unionByName(ghosts)
-        .unionByName(src_nk_out)
-    )
-    return _align_to_schema(merged, full_schema)
 
 
 def _check_bucket_type(

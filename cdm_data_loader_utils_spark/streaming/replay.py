@@ -156,16 +156,10 @@ def apply_batch(
     audit: AuditStore | None,
     run_id: str,
     batch_id: int,
-    salt_buckets: int = 32,
     prepared: _PreparedBatch | None = None,
 ) -> BatchResult:
     """Apply one micro-batch idempotently. Safe to call twice with the same
     (run_id, batch_id): the second call is fenced out by the snapshot log.
-
-    ``salt_buckets`` is kept for API stability but unused by the default
-    dedup: :func:`lww_dedup_agg`'s map-side partial aggregation already
-    neutralizes hot keys, so no explicit salting pass is needed (swap in
-    ``lww_dedup_salted`` here to compare strategies).
 
     ``prepared`` (optional) is a :class:`_PreparedBatch` for THESE events a
     pipelined driver computed ahead of time; ownership transfers here (its
@@ -262,6 +256,10 @@ def replay_batches(
     for N+1 starts only after N returns — so exactly-once fencing, LSN
     ordering and failure semantics are unchanged; a prepared batch that
     ends up fenced or unused is released, never applied.
+
+    ``salt_buckets`` is accepted and ignored: the dedup
+    (:func:`lww_dedup_agg`) combines hot keys map-side, so no salting pass
+    exists. It stays so existing callers that pass it keep working.
     """
     batch_ids = [
         int(r[0]) for r in events.select("batch_id").distinct().orderBy("batch_id").collect()
@@ -312,7 +310,7 @@ def replay_batches(
             results.append(
                 apply_batch(
                     batch_frame(bid), table, audit, run_id, bid,
-                    salt_buckets, prepared=prep,
+                    prepared=prep,
                 )
             )
     except Exception as e:
@@ -370,7 +368,6 @@ def stream_events(
     run_id: str,
     checkpoint_dir: str,
     max_files_per_trigger: int = 4,
-    salt_buckets: int = 32,
     trigger: str | None = None,
     timeout_sec: float | None = None,
 ):
@@ -400,7 +397,7 @@ def stream_events(
     )
 
     def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        apply_batch(batch_df, table, audit, run_id, int(batch_id), salt_buckets)
+        apply_batch(batch_df, table, audit, run_id, int(batch_id))
 
     writer = (
         stream.writeStream.foreachBatch(_sink)
@@ -445,7 +442,6 @@ def tail_lake_events(
     run_id: str,
     checkpoint_dir: str,
     max_snapshots_per_trigger: int = 4,
-    salt_buckets: int = 32,
     trigger: str | None = None,
     timeout_sec: float | None = None,
 ):
@@ -490,8 +486,7 @@ def tail_lake_events(
         )
 
         def _sink(batch_df: DataFrame, batch_id: int) -> None:
-            apply_batch(batch_df, table, audit, run_id, int(batch_id),
-                        salt_buckets)
+            apply_batch(batch_df, table, audit, run_id, int(batch_id))
 
         return (
             stream.writeStream.foreachBatch(_sink)

@@ -275,13 +275,9 @@ def test_scalar_functions(spark):
 
 # ------------------------------------------------------- lww equivalence
 def test_lww_variants_agree(spark):
-    """window, salted-window and max_by-aggregate forms must produce the
-    identical survivor set (total order ⇒ unique answer)."""
-    from cdm_data_loader_utils_spark.operators.lww import (
-        lww_dedup,
-        lww_dedup_agg,
-        lww_dedup_salted,
-    )
+    """window and max_by-aggregate forms must produce the identical
+    survivor set (total order ⇒ unique answer)."""
+    from cdm_data_loader_utils_spark.operators.lww import lww_dedup, lww_dedup_agg
     from cdm_data_loader_utils_spark.sources.events import generate_change_events
 
     ev = generate_change_events(
@@ -291,9 +287,8 @@ def test_lww_variants_agree(spark):
     # which the (lsn, ts, op) total order cannot and need not distinguish
     keys, order = ["conv_id", "turn_idx"], ["lsn", "ts"]
     a = {tuple(r) for r in lww_dedup(ev, keys, order).collect()}
-    b = {tuple(r) for r in lww_dedup_salted(ev, keys, order, 8).collect()}
-    c = {tuple(r) for r in lww_dedup_agg(ev, keys, order).collect()}
-    assert a == b == c
+    b = {tuple(r) for r in lww_dedup_agg(ev, keys, order).collect()}
+    assert a == b
     assert len(a) == ev.select(*keys).distinct().count()
 
 

@@ -63,11 +63,9 @@ def main() -> None:
 
     orig_apply = R.apply_batch
 
-    def timed_apply(events, table, audit, run_id, batch_id, salt_buckets=32,
-                    **kw):
+    def timed_apply(*a, **kw):
         t0 = time.perf_counter()
-        out = orig_apply(events, table, audit, run_id, batch_id, salt_buckets,
-                         **kw)
+        out = orig_apply(*a, **kw)
         TIMES["apply_batch_total"] = TIMES.get("apply_batch_total", 0.0) + (
             time.perf_counter() - t0)
         COUNTS["apply_batch_total"] = COUNTS.get("apply_batch_total", 0) + 1
